@@ -13,8 +13,12 @@ import org.apache.hadoop.util.LineReader
   * A plain text read of FASTQ cannot parallelize safely: records are 4 lines
   * and a byte split lands mid-record, so the round-2 implementation funneled
   * each file into ONE task (a 50 GB file = one task at 100 TB scale). This
-  * format keeps HDFS-block-sized splits and makes each reader sync itself to
-  * the first record boundary after its split start:
+  * format accepts splits of any size and makes each reader sync itself to
+  * the first record boundary after its split start. The split size is the
+  * caller's: [[Sequences.fastq]] sizes splits to the session's cores
+  * (`max(1 MiB, ceil(bytes / defaultParallelism))`, capped by Hadoop at the
+  * block size) unless `mapreduce.input.fileinputformat.split.maxsize` is
+  * already set, in which case that setting wins. Each reader:
   *
   *  - discard the (possibly partial) first line, as Hadoop's line reader does;
   *  - scan forward to the first line L0 with L0(0)=='@' and L2(0)=='+'. In

@@ -35,17 +35,27 @@ object Sequences {
   }
 
   /** FASTQ 4-line records via the split-parallel [[FastqInputFormat]]: each
-    * HDFS-block-sized split self-syncs to the next record boundary ('@' at
-    * line 1 AND '+' at line 3 — the same disambiguation rule as the
-    * reference, FileInputs.scala:196-209), so a 50 GB file reads as hundreds
-    * of tasks instead of one. `location` is the record's byte offset in its
-    * file. Compressed inputs (gz/bz2) read as one split per file. */
+    * split self-syncs to the next record boundary ('@' at line 1 AND '+' at
+    * line 3 — the same disambiguation rule as the reference,
+    * FileInputs.scala:196-209). `location` is the record's byte offset in
+    * its file.
+    *
+    * Splits are sized so that one read is one wave of tasks on the session's
+    * cores: `split.maxsize = max(1 MiB, ceil(bytes / defaultParallelism))`,
+    * where `bytes` is the total length of the files the path matches. Hadoop
+    * still caps every split at the block size, so a file larger than
+    * cores x block size keeps block-sized splits. The 1 MiB floor
+    * ([[MinFastqSplitBytes]]) keeps small inputs in one task. A
+    * `mapreduce.input.fileinputformat.split.maxsize` already set in the
+    * Hadoop configuration wins unchanged; the rule is applied to a copy, so
+    * the shared configuration is never modified. Compressed inputs (gz/bz2)
+    * read as one split per file. */
   def fastq(spark: SparkSession, path: String): Dataset[InputFragment] = {
     import spark.implicits._
     import org.apache.hadoop.io.{LongWritable, Text}
     val rdd = spark.sparkContext.newAPIHadoopFile(
         path, classOf[FastqInputFormat], classOf[LongWritable], classOf[Text],
-        spark.sparkContext.hadoopConfiguration)
+        coreSizedSplitConf(spark, path))
       // Hadoop reuses Writable instances: extract primitives immediately
       .map { case (k, v) => (k.get(), v.toString) }
       .map { case (offset, rec) =>
@@ -54,6 +64,39 @@ object Sequences {
           lines(1).trim, None)
       }
     spark.createDataset(rdd)
+  }
+
+  /** Floor of [[fastq]]'s core-sized split (~3k 150-bp records): an input
+    * under cores x 1 MiB reads in fewer tasks than there are cores. */
+  val MinFastqSplitBytes: Long = 1L << 20
+
+  private val SplitMaxSizeKey = "mapreduce.input.fileinputformat.split.maxsize"
+
+  /** A copy of the session's Hadoop configuration with [[fastq]]'s
+    * core-sized `split.maxsize`, unless the caller already set one. */
+  private def coreSizedSplitConf(spark: SparkSession, path: String)
+      : org.apache.hadoop.conf.Configuration = {
+    val shared = spark.sparkContext.hadoopConfiguration
+    val conf = new org.apache.hadoop.conf.Configuration(shared)
+    if (shared.get(SplitMaxSizeKey) == null) {
+      val cores = spark.sparkContext.defaultParallelism
+      val perCore = (inputBytes(conf, path) + cores - 1) / cores
+      conf.setLong(SplitMaxSizeKey, math.max(MinFastqSplitBytes, perCore))
+    }
+    conf
+  }
+
+  /** Total length of the files `path` matches (a directory counts its
+    * contents). A pattern that matches nothing counts 0, leaving the
+    * "Input path does not exist" error to Hadoop's own listing. */
+  private def inputBytes(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    Option(fs.globStatus(p)).toSeq.flatten.map { st =>
+      if (st.isDirectory) fs.getContentSummary(st.getPath).getLength
+      else st.getLen
+    }.sum
   }
 
   /** Pair R1/R2 mates by header (suffixes /1 /2 stripped); the paired

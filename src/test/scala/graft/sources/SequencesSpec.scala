@@ -90,11 +90,83 @@ class SequencesSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val locs = frags.map(_.location).sorted
       assert(locs.distinct.length == n)
       // identical result to a single-split read
-      hconf.unset("mapreduce.input.fileinputformat.split.maxsize")
-      val single = Sequences.fastq(spark, fq).collect()
+      hconf.setLong("mapreduce.input.fileinputformat.split.maxsize", Long.MaxValue)
+      val singleDs = Sequences.fastq(spark, fq)
+      assert(singleDs.rdd.getNumPartitions == 1)
+      val single = singleDs.collect()
       assert(single.map(f => (f.header, f.location, f.nucleotides)).sortBy(_._2)
         .sameElements(frags.map(f => (f.header, f.location, f.nucleotides)).sortBy(_._2)))
     } finally hconf.unset("mapreduce.input.fileinputformat.split.maxsize")
+  }
+
+  test("FASTQ splits to the session's cores when no split size is set") {
+    // >= 4 MiB of 150-bp records: above the 1 MiB-per-core floor on local[4],
+    // so the read is one task per core; every third quality line starts
+    // with '@' to stress boundary sync at the computed split starts
+    val rng = new scala.util.Random(61)
+    val sb = new StringBuilder
+    val n = 13500
+    for (i <- 0 until n) {
+      val seq = Array.fill(150)("ACGT"(rng.nextInt(4))).mkString
+      val qual = if (i % 3 == 0) "@" + "I" * 149 else "I" * 150
+      sb.append(s"@core$i desc\n$seq\n+\n$qual\n")
+    }
+    val fq = tmpFile("cores.fastq", sb.toString)
+    assert(Files.size(java.nio.file.Paths.get(fq)) >= (4L << 20))
+    val key = "mapreduce.input.fileinputformat.split.maxsize"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    assert(hconf.get(key) == null)
+    def rows(ds: org.apache.spark.sql.Dataset[InputFragment]) =
+      ds.collect().map(f => (f.header, f.location, f.nucleotides)).toSet
+
+    val ds = Sequences.fastq(spark, fq)
+    assert(ds.rdd.getNumPartitions == 4)
+    val cored = rows(ds)
+    assert(hconf.get(key) == null, "the shared Hadoop configuration was modified")
+    assert(cored.size == n)
+
+    hconf.setLong(key, Long.MaxValue)
+    val single =
+      try {
+        val singleDs = Sequences.fastq(spark, fq)
+        assert(singleDs.rdd.getNumPartitions == 1)
+        rows(singleDs)
+      } finally hconf.unset(key)
+    assert(hconf.get(key) == null)
+    assert(cored == single)
+  }
+
+  test("truncated FASTQ yields exactly the complete records") {
+    // a last record cut to fewer than 4 lines is dropped; the complete
+    // records before it all survive, whether the read is one split or
+    // many 16 KiB splits (the cut record then sits in the last split)
+    val rng = new scala.util.Random(67)
+    val sb = new StringBuilder
+    val n = 300
+    for (i <- 0 until n) {
+      val seq = Array.fill(80)("ACGT"(rng.nextInt(4))).mkString
+      val qual = if (i % 2 == 0) "@" * 80 else "I" * 80
+      sb.append(s"@full$i\n$seq\n+\n$qual\n")
+    }
+    val complete = (0 until n).map(i => s"full$i").toSet
+    val key = "mapreduce.input.fileinputformat.split.maxsize"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val tails = Seq("@cut\n", "@cut\nACGTACGT\n", "@cut\nACGTACGT\n+\n",
+      "@cut\nACGTACGT\n+", "@cut\nACG")
+    for ((tail, t) <- tails.zipWithIndex; splitBytes <- Seq(Long.MaxValue, 16384L)) {
+      val fq = tmpFile(s"truncated$t.fastq", sb.toString + tail)
+      hconf.setLong(key, splitBytes)
+      try {
+        val ds = Sequences.fastq(spark, fq)
+        val parts = ds.rdd.getNumPartitions
+        assert(if (splitBytes == Long.MaxValue) parts == 1 else parts > 1,
+          s"tail $t: $parts partition(s)")
+        val got = ds.collect()
+        assert(got.length == n, s"tail $t, split $splitBytes")
+        assert(got.map(_.header).toSet == complete, s"tail $t, split $splitBytes")
+        assert(got.forall(_.nucleotides.length == 80))
+      } finally hconf.unset(key)
+    }
   }
 
   test("gzip-compressed FASTQ parses transparently") {
